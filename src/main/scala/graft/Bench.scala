@@ -1,7 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.SparkSession
+
+import graft.queries.Registry
+
+/** Suite timing: `Bench [name ...]` times the named registry queries —
+  * all of them when none is named — with a warm pass, median-of-3 reps,
+  * `clearCache` after each rep and the plan's own `queryExecution.toRdd`
+  * as the measured action. Writes the full artifact to `GRAFT_BENCH_JSON`
+  * and prints one line per query plus a compact totals JSON line last. */
 object Bench {
 
   /** Execute a query's OWN physical plan and count its rows at the RDD
@@ -43,6 +52,7 @@ object Bench {
     } catch { case _: Throwable => "" }
 
   def main(args: Array[String]): Unit = {
+    val selected = Registry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -62,8 +72,8 @@ object Bench {
         new java.io.File(sfDir).getParentFile, "sf0.001")
       if (small.isDirectory) small.getPath else sfDir
     }
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try runPlan(fn(spark, warmDir)) catch { case _: Throwable => () }
+    selected.foreach { q =>
+      try runPlan(q.build(spark, warmDir)) catch { case _: Throwable => () }
     }
     spark.catalog.clearCache()
     // median-of-3 per query: the variance protocol. Single runs produced
@@ -92,15 +102,15 @@ object Bench {
     // artifact shows red.
     case class QStat(median: Double, reps: Seq[Double], gcMs: Long, pos: Int,
                      err: Option[String])
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
-      case ((name, fn), pos) =>
+    val results = selected.zipWithIndex.map {
+      case (q, pos) =>
         val gc0 = gcMillis()
         var err: Option[String] = None
         val times = (1 to 3).flatMap { _ =>
           if (err.isDefined) None // one crash condemns the query; don't re-crash x3
           else {
             val t0 = System.nanoTime()
-            try { runPlan(fn(spark, sfDir)) } catch {
+            try { runPlan(q.build(spark, sfDir)) } catch {
               case e: Throwable =>
                 err = Some(s"${e.getClass.getSimpleName}: " +
                   Option(e.getMessage).getOrElse("").linesIterator
@@ -117,106 +127,43 @@ object Bench {
         val median =
           if (err.isDefined || times.isEmpty) -1.0
           else times.sorted.apply(times.size / 2)
-        name -> QStat(median, times, gcMillis() - gc0, pos, err)
-    }.toMap
-    // Sink-writer throughput: the one genuinely custom write path
-    // (GroupFileWriter's group-per-object streaming) timed per codec AND
-    // per line format (JSONL + CSV — the two line-oriented reference
-    // formats) so a writer regression shows up in BENCH, not only in byte
-    // goldens. 200k ~120-byte lines across 64 groups to local FS per run;
-    // each entry reports seconds and uncompressed-input MB/s (bytes
-    // processed per second — codec-comparable, unlike output MB/s which
-    // would reward weak compression).
-    val sinkWrite = {
-      import graft.config.{CompressionType => C, FormatType}
-      val base = java.nio.file.Files.createTempDirectory("graft_sinkbench")
-      val nRows = 200000L
-      val nGroups = 64
-      def df(fmt: FormatType) = {
-        val line = fmt match {
-          case FormatType.Csv =>
-            // offset,base64(payload) — the reference's raw comma-join shape
-            concat(col("id").cast("string"), lit(","),
-              lpad(md5(col("id").cast("string")), 96, "x"))
-          case _ =>
-            concat(lit("{\"offset\":"), col("id").cast("string"),
-              lit(",\"payload\":\""),
-              lpad(md5(col("id").cast("string")), 96, "x"), lit("\"}"))
-        }
-        spark.range(nRows)
-          .select(col("id").as("offset"),
-            concat(lit("bench-topic-"), (col("id") % nGroups).cast("string"),
-              lit("." + fmt.name)).as("_filename"),
-            line.as("_line"))
-      }
-      // uncompressed input bytes (lines + newlines) per format, for MB/s
-      val fmts = Seq(FormatType.Jsonl, FormatType.Csv)
-      val fmtBytes = fmts.map { f =>
-        f -> df(f).agg(sum(length(col("_line")) + 1)).head().getLong(0)
-      }.toMap
-      val codecs = Seq(C.None, C.Gzip, C.Snappy, C.Zstd)
-      val times = for (f <- fmts; c <- codecs) yield {
-        val out = base.resolve(f.name + "_" + c.name).toUri.toString
-        val t0 = System.nanoTime()
-        graft.formats.GroupFileWriter.writeLines(df(f), out, f, c)
-        val sec = (System.nanoTime() - t0) / 1e9
-        (s"${f.name}_${c.name}", sec, fmtBytes(f) / 1e6 / sec)
-      }
-      // best-effort cleanup; the JVM exits right after either way
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-      (times, nRows, nGroups)
+        println(f"${q.name}%-28s median $median%.3f s  (runs: " +
+          times.map(t => f"$t%.2f").mkString(" ") + err.fold("")(" " + _) + ")")
+        q.name -> QStat(median, times, gcMillis() - gc0, pos, err)
     }
     val loadAfter = loadAvg()
     // The driver captures only a BOUNDED tail of the stdout (2000 chars in
     // rounds 17-18 — both rounds' BENCH_r{N}.json came back "parsed": null
     // because the full per-query telemetry line overflowed it). Split the
-    // output: the FULL artifact (per-query medians, reps, gc, sink table)
+    // output: the FULL artifact (per-query medians, reps, gc)
     // goes to a file (GRAFT_BENCH_JSON, default bench_runs/bench_full.json
     // — what bench_reps.sh installs as run{i}.json), and stdout's LAST
     // line is a compact totals JSON guaranteed to fit the tail window.
     // (build.sbt sets `Global / showSuccess := false` for the same reason —
     // otherwise sbt's "[success] Total time" line lands after ours.)
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      } + "\""
+    def f3(v: Double): java.math.BigDecimal =
+      java.math.BigDecimal.valueOf(v).setScale(3, java.math.RoundingMode.HALF_UP)
     // errored queries keep a numeric (but impossible) -1 in the queries map
     // so downstream numeric parsers don't trip; the err text lives in
     // telemetry and n_errors flags the artifact as red at the top level
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f3(v.median) }
-      .mkString("{", ",", "}")
-    val tel = results.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        "\"" + k + "\":{\"pos\":" + v.pos +
-          ",\"reps\":[" + v.reps.map(f3).mkString(",") + "]" +
-          ",\"gc_ms\":" + v.gcMs +
-          v.err.fold("")(e => ",\"err\":" + jstr(e)) + "}"
-      }
-      .mkString("{", ",", "}")
-    val nErrors = results.values.count(_.err.isDefined)
-    val sw = (sinkWrite._1.map { case (k, sec, mbs) =>
-      "\"" + k + "\":{\"sec\":" + f3(sec) + ",\"mb_s\":" + f3(mbs) + "}"
-    } ++
-      Seq("\"rows\":" + sinkWrite._2, "\"groups\":" + sinkWrite._3))
-      .mkString("{", ",", "}")
-    val total = results.values.collect {
-      case s if s.err.isEmpty => s.median
-    }.sum
+    val qs = ListMap.from(results.map { case (k, v) => k -> f3(v.median) })
+    val tel = ListMap.from(results.map { case (k, v) =>
+      k -> (ListMap("pos" -> v.pos, "reps" -> v.reps.map(f3),
+        "gc_ms" -> v.gcMs) ++ v.err.map("err" -> _))
+    })
+    val ok = results.map(_._2).filter(_.err.isEmpty)
+    val nErrors = results.size - ok.size
+    val total = ok.map(_.median).sum
     spark.stop()
     // n_queries mirrors Verify's COUNTS line into the bench artifact, so
     // BENCH_r{N}.json is self-describing about suite size (doc counts
     // cite COUNTS; the bench JSON can now be cross-checked against it)
     val action = if (LegacyCountAction) "count" else "plan"
-    val fullJson = s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"n_errors":$nErrors,"action":"$action","queries":$qs,"telemetry":$tel,"sink_write":$sw,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","sf":"$sfDir"}"""
+    val head = ListMap[String, Any]("metric" -> "total", "value" -> f3(total),
+      "unit" -> "sec", "n_queries" -> results.size, "n_errors" -> nErrors)
+    val fullJson = Json.write(head ++ ListMap("action" -> action,
+      "queries" -> qs, "telemetry" -> tel, "loadavg_before" -> loadBefore,
+      "loadavg_after" -> loadAfter, "sf" -> sfDir))
     val fullPath = java.nio.file.Paths.get(
       sys.env.getOrElse("GRAFT_BENCH_JSON", "bench_runs/bench_full.json"))
     Option(fullPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
@@ -226,15 +173,16 @@ object Bench {
     // at-a-glance triage) + the path of the full artifact. ~400 chars for
     // a 200-query suite — well inside the 2000-char driver tail.
     val medQ = {
-      val ms = results.values.collect {
-        case s if s.err.isEmpty => s.median }.toSeq.sorted
+      val ms = ok.map(_.median).sorted
       if (ms.isEmpty) -1.0 else ms(ms.size / 2)
     }
-    val top5 = results.toSeq.filter(_._2.err.isEmpty)
+    val top5 = ListMap.from(results.filter(_._2.err.isEmpty)
       .sortBy(-_._2.median).take(5)
-      .map { case (k, v) => "\"" + k + "\":" + f3(v.median) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"n_errors":$nErrors,"median_query":${f3(medQ)},"action":"$action","slowest":$top5,"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","sf":"$sfDir","full_json":"${fullPath.toString}"}""")
+      .map { case (k, v) => k -> f3(v.median) })
+    println(Json.write(head ++ ListMap("median_query" -> f3(medQ),
+      "action" -> action, "slowest" -> top5, "loadavg_before" -> loadBefore,
+      "loadavg_after" -> loadAfter, "sf" -> sfDir,
+      "full_json" -> fullPath.toString)))
     if (nErrors > 0) {
       Console.err.println(s"BENCH RED: $nErrors queries errored")
       sys.exit(1)

@@ -159,9 +159,7 @@ object DumpPlans {
     // and every registry key NOT headlined is emitted into a generated
     // coverage section, so a late-added query can never be silently
     // absent from PLANS.md.
-    val missing = Headliners.filterNot(SparkEntry.queries.contains)
-    require(missing.isEmpty,
-      s"DumpPlans: headliners not in SparkEntry.queries: ${missing.mkString(", ")}")
+    graft.queries.Registry.select(Headliners) // fails on a missing headliner
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")

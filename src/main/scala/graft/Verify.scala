@@ -1,15 +1,20 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import graft.queries.Registry
+
+/** Driver-run correctness dump: each registry query's result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * fails is listed with its message in `outDir/ERRORS` and the run exits
+  * non-zero. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName ...] — the optional tail
     // restricts the dump to named queries (local iteration; the driver
     // always passes exactly two args and dumps everything)
     val Array(sfDir, outDir) = args.take(2)
-    val only = args.drop(2).toSet
+    val selected = Registry.select(args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -19,33 +24,23 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val errors = selected.flatMap { q =>
+      val err =
+        try {
+          q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/${q.name}")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+          Some(s"${q.name}: ${e.getClass.getName}: ${e.getMessage}")
+        }
       // drop interior caches (simhashPairs, connectedComponents) so 61
       // queries in one JVM don't accumulate storage pressure
       spark.catalog.clearCache()
+      err
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.write(SparkEntry.oracleSql))
     // Single source of truth for the suite size — docs cite THIS line
     // (grep COUNTS) instead of hand-maintaining numbers that drift.
     val counts = s"COUNTS queries=${SparkEntry.queries.size} " +
@@ -53,5 +48,12 @@ object Verify {
     println(counts)
     Files.writeString(Paths.get(s"$outDir/COUNTS"), counts + "\n")
     spark.stop()
+    val errorsFile = Paths.get(s"$outDir/ERRORS")
+    if (errors.nonEmpty) {
+      Files.writeString(errorsFile, errors.mkString("", "\n", "\n"))
+      System.err.println(s"[verify] ${errors.size} queries failed; see $errorsFile")
+      sys.exit(1)
+    }
+    Files.deleteIfExists(errorsFile)
   }
 }

@@ -105,20 +105,30 @@ object GroupFileWriter {
       first = true
     }
 
-    it.foreach { row =>
-      val name = row.getString(0)
-      if (name != current) {
-        close(); open(name); current = name
+    try {
+      it.foreach { row =>
+        val name = row.getString(0)
+        if (name != current) {
+          close(); open(name); current = name
+        }
+        val line = row.getString(1)
+        if (jsonArray) {
+          if (!first) out.write(',')
+          out.write('\n')
+        }
+        out.write(line.getBytes(StandardCharsets.UTF_8))
+        if (!jsonArray) out.write('\n')
+        first = false
       }
-      val line = row.getString(1)
-      if (jsonArray) {
-        if (!first) out.write(',')
-        out.write('\n')
+      close()
+    } finally {
+      // a task failure mid-object must not leak the open, codec-wrapped
+      // stream; the secondary close failure is swallowed so the original
+      // task exception stays the one that propagates
+      if (out != null) {
+        try out.close() catch { case _: Throwable => () }
+        out = null
       }
-      out.write(line.getBytes(StandardCharsets.UTF_8))
-      if (!jsonArray) out.write('\n')
-      first = false
     }
-    close()
   }
 }

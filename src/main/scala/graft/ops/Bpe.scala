@@ -288,9 +288,7 @@ object Bpe {
     * rank-ordered merge table (feed to [[Coder]] /
     * [[graft.functions.BpeExpressions]] over [[preTokens]] symbols). */
   def trainBytesBatched(docs: DataFrame, nRounds: Int = 3,
-                        batchM: Int = 4,
-                        onRound: (Int, Int) => Unit = (_, _) => ())
-      : IndexedSeq[(String, String)] = {
+                        batchM: Int = 4): IndexedSeq[(String, String)] = {
     require(nRounds >= 1 && batchM >= 1,
       s"bpe trainBytesBatched: need nRounds >= 1 and batchM >= 1, " +
         s"got $nRounds/$batchM")
@@ -319,7 +317,6 @@ object Bpe {
             a == a2 || a == b2 || b == a2 || b == b2 }
         }.map(_._1).take(batchM)
         merges ++= kept
-        onRound(r, kept.length)
         if (r + 1 < nRounds) {
           syms = kept.foldLeft(syms) { case (s, (a, b)) =>
             s.select(col("w"), col("cnt"),

@@ -28,11 +28,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.vecDot(a, b)
 
-  /** The HOF formulation (kept for cross-checking the native kernel). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** dot/(n1·n2) guarded against a zero norm product: NULL instead of an

@@ -142,27 +142,20 @@ object S3SinkPipeline {
         Grouping.annotate(batch, config, now, schemaFingerprint)
     }
 
-    val prefixed = named
-
+    // the keys the grouping window clustered by: repartitioning the write
+    // on them keeps annotate+write to a single exchange
+    val groupCols = config.groupingMode match {
+      case GroupingMode.KeyRecord            => Seq("_k")
+      case GroupingMode.TopicPartitionRecord => Seq("topic", "partition")
+    }
     config.formatType match {
       case FormatType.Parquet =>
-        val pqGroupCols = config.groupingMode match {
-          case GroupingMode.KeyRecord            => Seq("_k")
-          case GroupingMode.TopicPartitionRecord => Seq("topic", "partition")
-        }
-        ParquetEnvelopeWriter.write(prefixed, baseUri, config, pqGroupCols,
+        ParquetEnvelopeWriter.write(named, baseUri, config, groupCols,
           wholeObjectCompression = config.parquetWholeObjectCompression)
       case _ =>
-        val withLine = prefixed.withColumn("_line",
-          lineColumn(config, batch.schema))
-        // repartition on the same keys the grouping window clustered by, so
-        // the annotate+write pipeline needs a single exchange
-        val groupCols = config.groupingMode match {
-          case GroupingMode.KeyRecord            => Seq("_k")
-          case GroupingMode.TopicPartitionRecord => Seq("topic", "partition")
-        }
-        GroupFileWriter.writeLines(withLine, baseUri, config.formatType,
-          config.compression, groupCols)
+        GroupFileWriter.writeLines(
+          named.withColumn("_line", lineColumn(config, batch.schema)),
+          baseUri, config.formatType, config.compression, groupCols)
     }
   }
 

@@ -63,12 +63,12 @@ class MarkupExpressionsSpec extends SparkSuite {
 
   test("markup kernel equals the chain on generated crawl-like rows " +
     "(the synthesized wrapper the oracle row uses, over varied ids)") {
-    // THE wrapper the oracle row runs (SparkEntry.markupWrapped), not a
+    // THE wrapper the oracle row runs (SamplingQueries.markupWrapped), not a
     // re-synthesis — a wrapper change automatically re-exercises this
     // parity test against the kernel
     val df = spark.range(0, 500)
       .select(col("id"),
-        graft.SparkEntry.markupWrapped(col("id"),
+        graft.queries.SamplingQueries.markupWrapped(col("id"),
           concat(lit("body "), (col("id") * 7).cast("string"))).as("text"))
     val bad = df.select(
       MarkupExpressions.extractMarkup(col("text")).as("fast"),
